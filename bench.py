@@ -38,7 +38,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from marketing_attribution_etl_framework__maef_spark import domain
+from marketing_attribution_etl_framework__maef_spark import stores
 from marketing_attribution_etl_framework__maef_spark.session import get_spark
 
 GC_EVERY = 6  # timed queries between forced driver GCs
@@ -105,7 +105,7 @@ CHECKPOINT_HEAVY = {
     # r07 (VERDICT r06 perf #1): the k-means family — kmeans_centroids
     # localCheckpoints per Lloyd round and the near-empty static plan
     # means wall = job latency, which is pure debris/GC exposure; the
-    # _KMEANS_CACHE build is also pre-staged below so neither family
+    # _kmeans8 store is also pre-staged below so neither family
     # query is charged the one-time centroid build
     "llm_ann_kmeans",
     "llm_ann_ivf_kmeans",
@@ -278,65 +278,17 @@ def main() -> None:
         for warm in ("maef_channel_report", "llm_multimodal_meta", "llm_ann_ivf"):
             queries[warm](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    # Drop warm-up state: the warm-dir events cache is useless for the
-    # timed SF, and the checkpoint/broadcast debris must go before we
-    # start the clock.  Then pre-populate the shared events cache for
-    # the TARGET SF so the first events-reading query measures its own
-    # plan, not the one-time cache fill every later query benefits from.
-    domain.clear_events_cache()
-    entrymod._JOURNEYS_CACHE.clear()  # warm-dir checkpoint blocks
-    entrymod._NEARDUP_BANDS_CACHE.clear()
-    entrymod._KMEANS_CACHE.clear()  # warm-dir Lloyd-loop checkpoints
-    entrymod._AUG_KMEANS_CACHE.clear()
-    entrymod._MINHASH_PAIRS_CACHE.clear()
-    entrymod._DUP_CLUSTERS_CACHE.clear()
-    entrymod._STREAM_SESSIONS_CACHE.clear()  # warm-dir streaming state blocks
-    entrymod._STREAM_USER_FLAGS_CACHE.clear()
-    entrymod._NGRAM_SETS_CACHE.clear()  # warm-dir shingle-set checkpoints
-    entrymod._ANN_TRUTH_CACHE.clear()  # warm-dir brute-truth checkpoints
-    entrymod._PQ_INDEX_CACHE.clear()  # warm-dir PQ index checkpoints
+    # Drop warm-up state: the warm-dir stores are useless for the timed
+    # SF, and their checkpoint/broadcast debris must go before we start
+    # the clock.  Then pre-stage every ``@staged(prestage=True)`` store
+    # for the TARGET SF (domain.events, the J1 journeys, the pair,
+    # centroid, truth and index stores, the streaming state tables) so
+    # the first consumer of each measures its own plan, not the
+    # one-time build every later consumer benefits from.
+    stores.clear_all()
     spark.catalog.clearCache()
     _drain(spark)
-    domain.events(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # pre-stage the shared J1 journeys table for the target SF (same
-    # rationale as the events cache line above: ~25 queries read the
-    # staged journeys; the one-time build should not land on whichever
-    # family query happens to run first)
-    entrymod._journeys(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    entrymod._basket_pairs(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    entrymod._bpe_encode(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # staged ingest-side corpus band table (VERDICT r05 perf #1): the
-    # one-time corpus shingle+minhash build should not be charged to
-    # llm_neardup_incremental's steady-state number
-    entrymod._neardup_corpus_bands(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # pre-stage the shared k=8 centroid table (VERDICT r06 perf #1): the
-    # bounded Lloyd loop is a one-time build consumed by the whole
-    # kmeans/IVF/recall/outlier family; charging it to whichever family
-    # query runs first made llm_ann_ivf_kmeans read 4.6x its plan cost
-    entrymod._kmeans8(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    entrymod._aug_kmeans8(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # pre-stage the corpus near-dup pair store (r07): six queries ride
-    # the pair graph; the one-time shingle+signature+band build should
-    # not be charged to whichever of them runs first
-    entrymod._minhash_pairs(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    entrymod._dup_clusters(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # pre-stage the shared streaming state tables (r09, VERDICT r08 #6):
-    # in production these are tables a long-lived streaming job maintains
-    # continuously; the one-time availableNow state build should not be
-    # charged to whichever serving twin runs first
-    entrymod._stream_sessions(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    entrymod._stream_user_flags(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # r11: the staged shingle-set store serving the exact-Jaccard and
-    # containment pair queries (same ingest-side-table rationale)
-    entrymod._ngram_sets(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # r12 (VERDICT r11 #2): the shared ANN brute-truth store read by the
-    # five recall audits — in production the ground-truth table a
-    # deployment refreshes once per index release
-    entrymod._ann_truth(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # r12: the staged PQ index (codes ARE the ingest-written index; the
-    # search and its recall audit still pay their ADC+rerank serving work)
-    for _t in entrymod._pq_index(spark, sf_dir):
-        _t.write.format("noop").mode("overwrite").save()
+    stores.prestage_all(spark, sf_dir)
 
     # r12 (VERDICT r11 #3): pre-warm the STREAMING engine with a 1-row
     # availableNow stream so the one-time engine init (state-store
@@ -346,11 +298,7 @@ def main() -> None:
     # only; no timing methodology changes.
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as _inc
 
-    _warm_src = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"),
-        ".bench_stream_warm",
-        spark.sparkContext.applicationId,
-    )
+    _warm_src = stores.scratch_dir(spark, sf_dir, "bench_stream_warm")
     spark.range(1).selectExpr("id AS user_id").write.mode("overwrite").parquet(_warm_src)
     _inc.run_to_memory(
         spark.readStream.schema("user_id long").parquet(_warm_src).groupBy("user_id").count(),
@@ -414,6 +362,9 @@ def main() -> None:
         t0 = time.perf_counter()
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         timings[name] = round(min(timings[name], time.perf_counter() - t0), 3)
+    # this application's scratch files (query sinks, streaming state,
+    # the warm-up source); other applications' roots are left alone
+    stores.remove_scratch(spark)
 
     total = round(sum(timings.values()), 3)
     detail = {

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from marketing_attribution_etl_framework__maef_spark import stores
 from marketing_attribution_etl_framework__maef_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -15,6 +17,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     s = get_spark("maef-tests", shuffle_partitions=8)
     yield s
+    stores.remove_scratch(s)
 
 
 @pytest.fixture(scope="session")

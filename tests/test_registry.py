@@ -3,9 +3,10 @@ gate that only sees the first 50, a window rotation could silently
 orphan an oracle or drop a query.  These asserts are pure-Python (no
 SparkSession) so they run first and fail fast."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 

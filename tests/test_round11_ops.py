@@ -388,9 +388,6 @@ def test_gate_ablation_marginal_counts(spark):
 
 
 def test_zone_map_skipping_sound_and_clustering_wins(spark, sf_dir):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
     rows = entrymod.queries()["rel_zone_map_skipping"](spark, sf_dir).collect()
@@ -458,9 +455,6 @@ def test_geo_holdout_lift_share_scaled_counterfactual(spark):
 
 
 def test_ann_ensemble_recall_dominates_parts(spark, sf_dir):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
     r = entrymod.queries()["llm_ann_ensemble_recall"](spark, sf_dir).collect()[0]

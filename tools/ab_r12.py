@@ -27,7 +27,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
-from marketing_attribution_etl_framework__maef_spark import domain
+from marketing_attribution_etl_framework__maef_spark import domain, stores
 from marketing_attribution_etl_framework__maef_spark.llm import classify as cls
 from marketing_attribution_etl_framework__maef_spark.llm import curation as cur
 from marketing_attribution_etl_framework__maef_spark.llm import dedup as dd
@@ -205,8 +205,6 @@ def old_nb_langid(spark, sf):
 
 
 def old_pipeline_e2e(spark, sf):
-    import shutil
-
     from marketing_attribution_etl_framework__maef_spark.operators import attribution as attr
     from marketing_attribution_etl_framework__maef_spark.operators import reporting as rpt
     from marketing_attribution_etl_framework__maef_spark.plans.pipeline import (
@@ -218,13 +216,7 @@ def old_pipeline_e2e(spark, sf):
         merge_upsert,
     )
 
-    root = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"),
-        ".wh_e2e_ab_old",
-        os.path.basename(os.path.normpath(sf)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
+    root = stores.scratch_dir(spark, sf, "wh_e2e_ab_old")
     pipe = AttributionPipeline(
         spark, sf, PipelineConfig(model="linear", report_mode="corrected")
     )
@@ -377,8 +369,6 @@ def _old_make_sessionizer(gap_minutes: int, max_events: int):
 
 
 def _sessionize_state_query(spark, sf, sessionizer_fn):
-    import shutil
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from marketing_attribution_etl_framework__maef_spark.streaming import incremental as inc
@@ -387,14 +377,7 @@ def _sessionize_state_query(spark, sf, sessionizer_fn):
         STATE_SCHEMA,
     )
 
-    root = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/maef_spark_scratch"),
-        ".sessionize_state_ab",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf)),
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
+    root = stores.scratch_dir(spark, sf, "sessionize_state_ab")
     ev = domain.events(spark, sf).select("user_id", "ts", "event_id", "event_type")
     mx = ev.agg(F.max("ts").alias("_mx"))
     sent = (
@@ -473,14 +456,7 @@ def main() -> None:
     spark = get_spark("ab-r12")
     queries = em.queries()
     spark.sparkContext.setJobDescription("prestage shared stores")
-    domain.events(spark, args.sf).write.format("noop").mode("overwrite").save()
-    for builder in (
-        em._journeys, em._minhash_pairs, em._dup_clusters, em._kmeans8,
-        em._aug_kmeans8, em._ngram_sets, em._aug_bands, em._ann_truth,
-    ):
-        _noop(builder(spark, args.sf))
-    for _t in em._pq_index(spark, args.sf):
-        _noop(_t)
+    stores.prestage_all(spark, args.sf)
 
     for name in names:
         old_fn, new_fn = PAIRS[name]

@@ -20,10 +20,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_DIR)
 
 import __spark_entry__ as entrymod
 from marketing_attribution_etl_framework__maef_spark.session import get_spark
@@ -112,6 +114,6 @@ def audit(sf_dir: str) -> str:
 if __name__ == "__main__":
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = audit(sf_dir)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(_REPO_DIR, "PLANS.md"), "w") as f:
         f.write(out)
     print(out)
